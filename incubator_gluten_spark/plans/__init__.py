@@ -125,20 +125,12 @@ _FRONT = (
 
 
 def collect_all() -> dict[str, Q]:
-    """Merge every plan module's registry (import here to avoid cycles).
-
-    Modules are imported defensively so a not-yet-landed (or locally broken)
-    plan module never takes down the whole inventory — mirrors the
-    reference's per-suite opt-outs (BackendTestSettings.scala).
-    """
+    """Merge every plan module's registry (import here to avoid cycles)."""
     import importlib
 
     merged: dict[str, Q] = {}
     for mod_name in _PLAN_MODULES:
-        try:
-            mod = importlib.import_module(f"incubator_gluten_spark.plans.{mod_name}")
-        except ImportError:
-            continue
+        mod = importlib.import_module(f"incubator_gluten_spark.plans.{mod_name}")
         for q in getattr(mod, "REGISTRY", []):
             if q.name in merged:
                 raise ValueError(f"duplicate query name: {q.name}")

@@ -1705,11 +1705,26 @@ def _write_actions(root: str, version: int, actions: Iterable[dict]) -> None:
     actions = _assign_row_ids(root, version, list(actions))
     actions = _stamp_in_commit_timestamp(root, version, actions)
     path = _commit_path(root, version)
-    if os.path.exists(path):
-        raise FileExistsError(f"commit {version} already exists (conflict)")
-    with open(path, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
+    # put-if-absent: stage the whole commit under a dot-prefixed name no
+    # log listing matches, then hard-link it into place.  link() fails
+    # atomically when the version exists, so a losing writer can never
+    # overwrite the winner, and a failure mid-write leaves no torn commit.
+    tmp = os.path.join(
+        _log_dir(root), f".{version:020d}.{uuid.uuid4().hex}.tmp"
+    )
+    try:
+        with open(tmp, "w") as f:
+            for a in actions:
+                f.write(json.dumps(a) + "\n")
+        try:
+            os.link(tmp, path)
+        except FileExistsError:
+            raise FileExistsError(
+                f"commit {version} already exists (conflict)"
+            ) from None
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def _footer_min_max(meta) -> dict:

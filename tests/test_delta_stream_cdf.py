@@ -13,11 +13,10 @@ from pyspark.sql import functions as F
 
 from incubator_gluten_spark.sources import delta_protocol as dp
 from incubator_gluten_spark.sources.delta_stream import (
-    _DeltaPartitionedStreamReader,
-    _decode_cdc_table,
-    _plan_cdc,
+    DeltaStreamDataSource,
     register_delta_stream_source,
 )
+from incubator_gluten_spark.testing.stream import micro_batch, open_reader
 
 
 def _mk(spark, rows):
@@ -38,24 +37,16 @@ def table(spark, tmp_path):
     return root
 
 
-def _all_changes(root, lo=-1, hi=None):
-    import json as _json
-    import os as _os
+def _cdf_reader(root):
+    return open_reader(
+        DeltaStreamDataSource, {"path": root, "readChangeFeed": "true"}
+    )
 
-    if hi is None:
-        hi = max(
-            int(n[:-5])
-            for n in _os.listdir(_os.path.join(root, "_delta_log"))
-            if n.endswith(".json")
-        )
-    entries, fields, part_cols = _plan_cdc(root, lo, hi)
-    out = []
-    for e in entries:
-        t = _decode_cdc_table(root, e, fields, part_cols)
-        out.extend(
-            zip(*(t.column(c).to_pylist() for c in t.column_names))
-        )
-    return sorted(out)
+
+def _all_changes(root, lo=-1, hi=None):
+    end = None if hi is None else {"version": hi}
+    rows, _ = micro_batch(_cdf_reader(root), {"version": lo}, end)
+    return sorted(rows)
 
 
 def test_plan_and_decode_full_history(table):
@@ -83,7 +74,7 @@ def test_cdf_off_refuses(spark, tmp_path):
     dp.create_table(_mk(spark, [(1, "a")]), root)
     dp.append(_mk(spark, [(2, "b")]), root)
     with pytest.raises(ValueError, match="not enabled"):
-        _plan_cdc(root, -1, 1)
+        micro_batch(_cdf_reader(root), {"version": -1}, {"version": 1})
 
 
 def test_engine_driven_cdf_stream(table, spark, tmp_path):

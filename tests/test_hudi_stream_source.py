@@ -13,8 +13,10 @@ from pyspark.sql import functions as F
 
 from incubator_gluten_spark.sources import hudi_format as hf
 from incubator_gluten_spark.sources.hudi_stream import (
+    HudiStreamDataSource,
     register_hudi_stream_source,
 )
+from incubator_gluten_spark.testing.stream import micro_batch, open_reader
 
 BASE = f"/tmp/spark_graft_hudi_stream_{os.getpid()}"
 
@@ -95,8 +97,8 @@ def test_upsert_delivers_changed_records_only(spark):
 
 
 def test_max_commits_per_batch_paces_backlog(spark):
-    """Three commits with maxCommitsPerBatch=1: the reader's read()
-    advances one instant per call (paced backlog drain)."""
+    """Three commits with maxCommitsPerBatch=1: each micro-batch
+    advances one instant (paced backlog drain)."""
     register_hudi_stream_source(spark)
     root = _fresh("paced")
     df1 = spark.range(3).select(F.col("id").alias("k"), F.col("id").alias("v"))
@@ -110,27 +112,25 @@ def test_max_commits_per_batch_paces_backlog(spark):
             root,
             key_col="k",
         )
-    from incubator_gluten_spark.sources.hudi_stream import (
-        _HudiTableStreamReader,
+    rd = open_reader(
+        HudiStreamDataSource, {"path": root, "maxCommitsPerBatch": "1"}
     )
-
-    rd = _HudiTableStreamReader({"path": root, "maxCommitsPerBatch": "1"})
     committed = hf.completed_instants(root)
     off = rd.initialOffset()
     seen = []
     for expect in committed:
-        it, off = rd.read(off)
-        seen.append((off["instant"], len(list(it))))
+        rows, off = micro_batch(rd, off)
+        seen.append((off["instant"], len(rows)))
     assert [i for i, _ in seen] == committed
     assert [n for _, n in seen] == [3, 3, 3]
-    # drained: a further read is empty and holds the offset
-    it, off2 = rd.read(off)
-    assert list(it) == [] and off2 == off
+    # drained: a further batch is empty and holds the offset
+    rows, off2 = micro_batch(rd, off)
+    assert rows == [] and off2 == off
 
 
 def test_replay_between_offsets_is_deterministic(spark):
-    """readBetweenOffsets replays the same (start, end] rows the live
-    read delivered — the exactly-once recovery path."""
+    """Re-planning a committed (start, end] window replays the rows the
+    live batch delivered — the exactly-once recovery path."""
     register_hudi_stream_source(spark)
     root = _fresh("replay")
     df1 = spark.range(4).select(F.col("id").alias("k"), F.col("id").alias("v"))
@@ -141,15 +141,16 @@ def test_replay_between_offsets_is_deterministic(spark):
         root,
         key_col="k",
     )
-    from incubator_gluten_spark.sources.hudi_stream import (
-        _HudiTableStreamReader,
-    )
-
     c = hf.completed_instants(root)
-    rd = _HudiTableStreamReader({"path": root})
-    live = sorted(rd._rows(c[0], c[1]))
-    replay = sorted(rd.readBetweenOffsets({"instant": c[0]}, {"instant": c[1]}))
-    assert live == replay
+    rd = open_reader(HudiStreamDataSource, {"path": root})
+    live, end = micro_batch(rd, {"instant": c[0]})
+    assert end == {"instant": c[1]}
+    replay, _ = micro_batch(
+        open_reader(HudiStreamDataSource, {"path": root}),
+        {"instant": c[0]},
+        end,
+    )
+    assert sorted(live) == sorted(replay)
     assert sorted(r[0] for r in live) == [2, 9]
 
 
@@ -166,13 +167,9 @@ def test_mor_table_refuses(spark):
     with open(props_path, "w") as f:
         f.write(props.replace("COPY_ON_WRITE", "MERGE_ON_READ"))
     from incubator_gluten_spark.sources.hudi_format import HudiFormatError
-    from incubator_gluten_spark.sources.hudi_stream import (
-        _HudiTableStreamReader,
-    )
-
-    rd = _HudiTableStreamReader({"path": root})
     with pytest.raises(HudiFormatError, match="MERGE_ON_READ"):
-        list(rd._rows("", "99999999999999999"))
+        rd = open_reader(HudiStreamDataSource, {"path": root})
+        micro_batch(rd, {"instant": ""}, {"instant": "99999999999999999"})
 
 
 def test_newest_base_file_by_instant_not_basename():
@@ -194,10 +191,6 @@ def test_partitioned_reader_per_file_and_executor_decode(spark):
     """r10: one InputPartition per candidate base file; the engine-side
     micro-batch carries one partition per file and the record-level
     commit-time filter runs executor-side."""
-    from incubator_gluten_spark.sources.hudi_stream import (
-        _HudiPartitionedStreamReader,
-    )
-
     root = _fresh("part_reader")
     df1 = spark.range(4).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
@@ -211,18 +204,12 @@ def test_partitioned_reader_per_file_and_executor_decode(spark):
         root,
         key_col="k",
     )
-    r = _HudiPartitionedStreamReader({"path": root})
+    r = open_reader(HudiStreamDataSource, {"path": root})
     r.initialOffset()
     end = r.latestOffset()
     parts = r.partitions({"instant": ""}, end)
     assert len(parts) >= 1
-    rows = []
-    for p in parts:
-        for item in r.read(p):
-            if hasattr(item, "columns"):
-                rows.extend(zip(*[c.to_pylist() for c in item.columns]))
-            else:
-                rows.append(tuple(item))
+    rows, _ = micro_batch(r, {"instant": ""}, end)
     assert sorted(r[0] for r in rows) == list(range(8))
     register_hudi_stream_source(spark)
     seen: list[int] = []

@@ -153,15 +153,15 @@ def test_migrated_table_streams_with_partition_injection(spark):
     must inject identity partition values from the manifest tuple —
     the r9 ADVICE silent-NULL case."""
     from incubator_gluten_spark.sources.iceberg_stream import (
-        _IcebergTableStreamReader,
+        IcebergStreamDataSource,
     )
+    from incubator_gluten_spark.testing.stream import micro_batch, open_reader
 
     root = _fresh("stream_inject")
     _hive_dir(spark, root)
     mig.migrate_hive_dir(spark, root, partition_cols={"p": "string"})
-    rd = _IcebergTableStreamReader({"path": root})
-    rows, _ = rd.read({"snapshot": 0})
-    rows = list(rows)
+    rd = open_reader(IcebergStreamDataSource, {"path": root})
+    rows, _ = micro_batch(rd, {"snapshot": 0})
     assert len(rows) == 12
     # schema order: k, v, p — p must carry the injected dir value
     assert all(r[2] == str(r[0] % 3) for r in rows)

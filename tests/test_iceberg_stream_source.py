@@ -11,9 +11,14 @@ from pyspark.sql import functions as F
 
 from incubator_gluten_spark.sources import iceberg_format as ice
 from incubator_gluten_spark.sources.iceberg_stream import (
-    _IcebergTableStreamReader,
+    IcebergStreamDataSource,
     register_iceberg_stream_source,
 )
+from incubator_gluten_spark.testing.stream import micro_batch, open_reader
+
+
+def _reader(options):
+    return open_reader(IcebergStreamDataSource, options)
 
 
 def _rows(df):
@@ -33,37 +38,38 @@ def table(spark, tmp_path):
 
 
 def test_offsets_and_replay(table, spark):
-    r = _IcebergTableStreamReader({"path": table})
+    r = _reader({"path": table})
     assert r.initialOffset() == {"snapshot": 0}
-    rows, off = r.read({"snapshot": 0})
+    rows, off = micro_batch(r, {"snapshot": 0})
     rows = sorted(rows)
     assert off == {"snapshot": 2}
     assert rows == [(1, "a"), (2, "b"), (3, "c")]
-    assert sorted(r.readBetweenOffsets({"snapshot": 0}, {"snapshot": 2})) == rows
-    empty, off2 = r.read(off)
-    assert list(empty) == [] and off2 == off
+    replay, _ = micro_batch(r, {"snapshot": 0}, {"snapshot": 2})
+    assert sorted(replay) == rows
+    empty, off2 = micro_batch(r, off)
+    assert empty == [] and off2 == off
     # incremental: a new append streams alone
     ice.append(_mk(spark, [(4, "d")]), table)
-    inc, off3 = r.read(off)
+    inc, off3 = micro_batch(r, off)
     assert sorted(inc) == [(4, "d")] and off3 == {"snapshot": 3}
 
 
 def test_identity_partition_values_present(table, spark):
     # Iceberg data files carry the partition column — the stream reads
     # it straight from parquet (delta would need log injection)
-    r = _IcebergTableStreamReader({"path": table})
-    rows = sorted(r.readBetweenOffsets({"snapshot": 0}, {"snapshot": 1}))
+    r = _reader({"path": table})
+    rows = sorted(micro_batch(r, {"snapshot": 0}, {"snapshot": 1})[0])
     assert rows == [(1, "a"), (2, "b")]
 
 
 def test_non_append_snapshot_refuses_without_opt_in(table, spark):
     ice.delete_partition(table, {"grp": "a"})
-    r = _IcebergTableStreamReader({"path": table})
+    r = _reader({"path": table})
     with pytest.raises(ValueError, match="ignoreChanges"):
-        list(r.readBetweenOffsets({"snapshot": 2}, {"snapshot": 3}))
-    r2 = _IcebergTableStreamReader({"path": table, "ignorechanges": "true"})
+        micro_batch(r, {"snapshot": 2}, {"snapshot": 3})
+    r2 = _reader({"path": table, "ignorechanges": "true"})
     # the delete snapshot ADDED no files -> zero rows, stream continues
-    assert list(r2.readBetweenOffsets({"snapshot": 2}, {"snapshot": 3})) == []
+    assert micro_batch(r2, {"snapshot": 2}, {"snapshot": 3})[0] == []
 
 
 def test_schema_evolution_nulls_for_old_files(table, spark):
@@ -74,9 +80,9 @@ def test_schema_evolution_nulls_for_old_files(table, spark):
         ).coalesce(1),
         table,
     )
-    r = _IcebergTableStreamReader({"path": table})
+    r = _reader({"path": table})
     rows = sorted(
-        r.readBetweenOffsets({"snapshot": 0}, {"snapshot": 3}),
+        micro_batch(r, {"snapshot": 0}, {"snapshot": 3})[0],
         key=lambda t: t[0],
     )
     assert rows == [
@@ -120,23 +126,13 @@ def test_partitioned_reader_per_file_and_executor_decode(table, spark):
     """r10: the partition-planned reader plans one InputPartition per
     ADDED data_file; the engine-side micro-batch DataFrame carries one
     partition per file (proof the decode ran where partitions run)."""
-    from incubator_gluten_spark.sources.iceberg_stream import (
-        _IcebergPartitionedStreamReader,
-    )
-
-    r = _IcebergPartitionedStreamReader({"path": table})
+    r = _reader({"path": table})
     r.initialOffset()
     end = r.latestOffset()
     parts = r.partitions({"snapshot": 0}, end)
     n_files = len(ice.plan_files(table))
     assert len(parts) == n_files >= 2
-    rows = []
-    for p in parts:
-        for item in r.read(p):
-            if hasattr(item, "columns"):  # pyarrow RecordBatch
-                rows.extend(zip(*[c.to_pylist() for c in item.columns]))
-            else:
-                rows.append(tuple(item))
+    rows, _ = micro_batch(r, {"snapshot": 0}, end)
     assert sorted(rows) == [(1, "a"), (2, "b"), (3, "c")]
     # engine-side: one micro-batch partition per planned file
     register_iceberg_stream_source(spark)
@@ -154,11 +150,7 @@ def test_partitioned_reader_per_file_and_executor_decode(table, spark):
 
 
 def test_partitioned_reader_validates_at_planning(table, spark):
-    from incubator_gluten_spark.sources.iceberg_stream import (
-        _IcebergPartitionedStreamReader,
-    )
-
     ice.delete_partition(table, {"grp": "a"})
-    r = _IcebergPartitionedStreamReader({"path": table})
+    r = _reader({"path": table})
     with pytest.raises(ValueError, match="ignoreChanges"):
         r.partitions({"snapshot": 0}, {"snapshot": 3})

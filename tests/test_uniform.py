@@ -101,8 +101,9 @@ def test_stream_source_delivers_each_file_once(spark):
     """The Iceberg streaming source over a UniForm table: after a sync,
     only the NEW files' rows stream (EXISTING entries skipped)."""
     from incubator_gluten_spark.sources.iceberg_stream import (
-        _IcebergTableStreamReader,
+        IcebergStreamDataSource,
     )
+    from incubator_gluten_spark.testing.stream import micro_batch, open_reader
 
     root = _fresh("stream_once")
     _mk(spark, root, n=10)
@@ -116,9 +117,9 @@ def test_stream_source_delivers_each_file_once(spark):
         root,
     )
     uf.sync_uniform(spark, root)
-    rd = _IcebergTableStreamReader({"path": root})
-    batch1 = list(rd._rows(0, 1))
-    batch2 = list(rd._rows(1, 2))
+    rd = open_reader(IcebergStreamDataSource, {"path": root})
+    batch1, _ = micro_batch(rd, {"snapshot": 0}, {"snapshot": 1})
+    batch2, _ = micro_batch(rd, {"snapshot": 1}, {"snapshot": 2})
     assert len(batch1) == 10 and len(batch2) == 4
     assert {r[0] for r in batch2} == {10, 11, 12, 13}
     # UniForm data files lack identity partition columns; the stream

@@ -1,7 +1,7 @@
 """Measure the r11 executor-side identity-partitioned Iceberg write
 against the pre-r11 driver-side reattach (round-10 verdict directive
 #2 follow-through: the 'move, never rewrite' claim gets a measurement,
-like tools/stream_reader_scaling.py did for the stream readers).
+like the r10 stream-reader measurement in SCALE.md).
 
 Method: stage an identity-partitioned write once, then time the
 FINALIZE step — the part the r10 verdict flagged — two ways over the
